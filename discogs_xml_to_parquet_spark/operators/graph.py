@@ -123,7 +123,7 @@ def _min_label_from_sym(sym: DataFrame, max_iter: int) -> DataFrame:
             new_labels = new_labels.localCheckpoint(eager=False)
         changed = new_labels.filter(
             F.col("comp") != F.col("old_comp")
-        ).count()  # the lazy path's one job: checkpoint + probe
+        ).count()  # the lazy path's one result-stage job: checkpoint + probe
         labels = new_labels.select("id", "comp")
         if changed == 0:
             break

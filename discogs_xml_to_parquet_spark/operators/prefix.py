@@ -186,7 +186,7 @@ def running_sum(
         .select(*gcols, "_pid", "_off")
     )
     return (
-        r.join(F.broadcast(offs), gcols + ["_pid"])
+        r.join(offs, gcols + ["_pid"])
         # mirror Window sum's null semantics exactly: NULL only when
         # the whole inclusive frame holds no non-null value -- i.e.
         # BOTH the within-bucket sum and the prior-bucket carry are
@@ -232,7 +232,7 @@ def running_max_strict(
         .select("_pid", "_off")
     )
     return (
-        r.join(F.broadcast(offs), "_pid")
+        r.join(offs, "_pid")
         .withColumn(out, F.greatest(F.col("_local"), F.col("_off")))
         .drop("_pid", "_local", "_off")
     )
@@ -302,6 +302,7 @@ def value_at_ranks(
         (F.col("_rank") > F.col("_before"))
         & (F.col("_rank") <= F.col("_before") + F.col("_bn"))
     ).select(*gcols, "_tag", "_rank", "_pid", "_before")
+    # hint: sel derives from the checkpointed r (no size stats); unhinted, r builds
     cand = r.join(F.broadcast(sel), gcols + ["_pid"])
     w_in = Window.partitionBy(*gcols, "_pid", "_tag").orderBy(
         order_col
@@ -324,5 +325,6 @@ def value_at_ranks(
     # with null tag columns, not silently vanishes (review r11). The
     # ungrouped branch needs no left join: a global agg over an empty
     # `vals` still yields exactly one (all-null) row.
+    # hint: piv derives from the checkpointed r (no size stats); unhinted, sort-merge
     return (tot.join(F.broadcast(piv), gcols, "left") if gcols
-            else tot.crossJoin(F.broadcast(piv)))
+            else tot.crossJoin(piv))

@@ -99,6 +99,7 @@ def brute_force_topk(queries_df: DataFrame, corpus_df: DataFrame,
         F.sqrt(V.norm2(F.col("v"))).alias("n_nrm"),
     )
     scored = (
+        # hint: a filter keeps its input's size estimate; unhinted, the corpus builds
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("q_id") != F.col("n_id"))

@@ -71,6 +71,7 @@ def language_id(df: DataFrame, id_col: str = "doc_id",
     )
     hits = (
         df.select(F.col(id_col), F.explode(toks(F.col(text_col))).alias("word"))
+        # hint: explode hides the token fan-out, so unhinted the corpus side builds
         .join(F.broadcast(sw), "word")
         .groupBy(id_col, "lang")
         .agg(F.count(F.lit(1)).alias("hits"))
@@ -205,6 +206,7 @@ def language_id_ngram(df: DataFrame, id_col: str = "doc_id",
         df.select(
             F.col(id_col), F.explode(char_trigrams(F.col(text_col))).alias("trigram")
         )
+        # hint: explode hides the trigram fan-out, so unhinted the corpus side builds
         .join(F.broadcast(prof), "trigram")
         .groupBy(id_col, "lang")
         .agg(F.count(F.lit(1)).alias("hits"))

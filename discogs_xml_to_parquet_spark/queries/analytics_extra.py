@@ -100,6 +100,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     du = deg.select(F.col("n").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("n").alias("v"), F.col("deg").alias("dv"))
+    # hint: deg is checkpointed (no size stats), so unhinted the edge list builds
     ed = edges.join(F.broadcast(du), "u").join(F.broadcast(dv), "v")
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
@@ -122,8 +123,9 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_nodes = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     return (
+        # hint: unhinted, AQE's runtime plan built n_nodes instead at sf0.1
         n_nodes.crossJoin(F.broadcast(n_edges))
-        .crossJoin(F.broadcast(tri))
+        .crossJoin(tri)
         .select("n_nodes", "n_edges", "n_triangles")
     )
 
@@ -229,7 +231,7 @@ def q_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table at every scale. Range-partitioned two-phase scan instead.
     cum = P.running_sum(pc, [F.col("price").asc()], F.col("n"), "c")
     tot = pc.agg(F.sum("n").alias("nt"))
-    bucketed = cum.crossJoin(F.broadcast(tot)).withColumn(
+    bucketed = cum.crossJoin(tot).withColumn(
         "bucket",
         (
             F.lit(1)

@@ -66,6 +66,7 @@ def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     """(vec_id, v) x broadcast (cid, cv) -> nearest centroid per vector
     by squared L2, ties broken on the lower cid. Returns
     (vec_id, cluster_id, d2, v)."""
+    # hint: a filter keeps its input's size estimate; unhinted, the corpus builds (sf0.1)
     j = vectors.crossJoin(F.broadcast(centroids))
     w = Window.partitionBy("vec_id").orderBy("d2", "cid")
     return (

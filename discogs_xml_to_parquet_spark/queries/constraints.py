@@ -74,7 +74,7 @@ def _audit(o: DataFrame, dim: DataFrame) -> DataFrame:
     dim_keys = dim.select(
         F.col(dim.columns[0]).alias("_dim_key")).distinct()
     flagged = o.join(
-        F.broadcast(dim_keys),
+        dim_keys,
         o["o_custkey"] == dim_keys["_dim_key"],
         "left",
     )

@@ -213,7 +213,7 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cum_tokens",
     )
     return (
-        ordered.crossJoin(F.broadcast(budget))
+        ordered.crossJoin(budget)
         .filter(F.col("cum_tokens") <= F.col("b"))
         .select("doc_id", "quality_ppm", "n_tokens", "cum_tokens")
         .orderBy("doc_id")

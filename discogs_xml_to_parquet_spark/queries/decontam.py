@@ -73,7 +73,7 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = grams.filter(is_eval).select("gram").distinct()
     train = grams.filter(~is_eval)
     return (
-        train.join(F.broadcast(ev), "gram")
+        train.join(ev, "gram")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shared_grams"),
@@ -184,7 +184,7 @@ def q_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = pos.filter(is_eval).select("pos").distinct()
     return (
         pos.filter(~is_eval)
-        .join(F.broadcast(bloom), "pos")
+        .join(bloom, "pos")
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("k_hits"))
         .filter(F.col("k_hits") == BLOOM_K)

@@ -128,8 +128,7 @@ def mor_read(spark: SparkSession, base: str, dv_dir: str) -> DataFrame:
     if not any(Path(dv_dir).glob("o_month=*")):
         return spark.read.parquet(base)
     dv = spark.read.parquet(dv_dir).select("o_orderkey")
-    return spark.read.parquet(base).join(
-        F.broadcast(dv), on="o_orderkey", how="left_anti")
+    return spark.read.parquet(base).join(dv, on="o_orderkey", how="left_anti")
 
 
 def apply_deletion_vectors(spark: SparkSession, base: str,
@@ -230,7 +229,7 @@ def positional_read(spark: SparkSession, base: str,
             F.col("_metadata.row_index").alias("_dv_ri"),
         )
         .join(
-            F.broadcast(dv),
+            dv,
             (F.col("_dv_fp") == F.col("file_path"))
             & (F.col("_dv_ri") == F.col("row_pos")),
             "left_anti",

@@ -77,10 +77,8 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash pins binning, the conditional single-scan split, AND the
     floor-division share arithmetic."""
     e = load(spark, sf_dir, "events")
-    cut = F.broadcast(
-        e.agg(
-            (F.min("ts") + F.expr(f"INTERVAL {_SPLIT_DAYS} DAYS")).alias("c")
-        )
+    cut = e.agg(
+        (F.min("ts") + F.expr(f"INTERVAL {_SPLIT_DAYS} DAYS")).alias("c")
     )
     binned = (
         e.crossJoin(cut)
@@ -108,7 +106,7 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n_old").alias("t_old"), F.sum("n_new").alias("t_new"))
     )
     return (
-        binned.join(F.broadcast(w_tot), "event_type")
+        binned.join(w_tot, "event_type")
         .select(
             "event_type", "t_old", "t_new",
             # NULLIF guards the zero-snapshot divisor (ADVICE r9): a

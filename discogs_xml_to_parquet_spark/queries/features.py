@@ -135,6 +135,7 @@ def q_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     med_star = bounds1[len(bounds1) // 2] if bounds1 else 0.0
     dev_bounds = sorted(abs(b - med_star) for b in bounds1)
     dev = (
+        # hint: both sides are checkpointed (no size stats); unhinted vc builds
         vc.join(F.broadcast(med1), "g")
         .select("g", F.abs(F.col("v") - F.col("med")).alias("v"), "cnt")
         .groupBy("g", "v")
@@ -194,6 +195,7 @@ def q_feature_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("p100") * F.col("p100")).alias("spp"),
     )
     return (
+        # hint: an aggregate keeps its input's size estimate; unhinted, lineitem builds
         scaled.join(F.broadcast(sums), "l_returnflag")
         .selectExpr(
             "l_orderkey",

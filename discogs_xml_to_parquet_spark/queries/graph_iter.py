@@ -166,7 +166,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             contrib.join(outdeg.hint("shuffle_hash"),
                          contrib["dst"] == outdeg["onode"])
-            .crossJoin(F.broadcast(nn))
+            .crossJoin(nn)
             .selectExpr(
                 "dst AS node",
                 f"(CAST((15 * ({_SCALE} div n)) div 100"
@@ -180,7 +180,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13's fused per-edge spelling ((SCALE div n) div odeg), pinned
     # by the unchanged oracle (whose r0 CTE still materializes the
     # uniform vector), and it makes every round the SAME shape.
-    parts = outdeg.crossJoin(F.broadcast(nn)).selectExpr(
+    parts = outdeg.crossJoin(nn).selectExpr(
         "onode AS node", f"({_SCALE} div n) div odeg AS part"
     )
     for it in range(_ITERS):
@@ -214,7 +214,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         if it < _ITERS - 1:
             parts = _next_parts(contrib)
     # the LAST round keeps the undivided rank (the output quantity)
-    ranks = contrib.crossJoin(F.broadcast(nn)).selectExpr(
+    ranks = contrib.crossJoin(nn).selectExpr(
         "dst AS node",
         f"CAST((15 * ({_SCALE} div n)) div 100"
         " + (85 * s) div 100 AS BIGINT) AS r",

@@ -192,9 +192,7 @@ def q_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation. The cutoff crossJoin is a 1-row broadcast (same pattern
     as Q22's threshold scalar)."""
     e = load(spark, sf_dir, "events")
-    cut = F.broadcast(
-        e.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cut"))
-    )
+    cut = e.agg((F.max("ts") - F.expr("INTERVAL 7 DAYS")).alias("cut"))
     tagged = e.crossJoin(cut)
     base = stage_df(_rollup(
         tagged.filter(F.col("ts") < F.col("cut"))
@@ -248,13 +246,11 @@ def join_view_refresh(spark: SparkSession, mv: DataFrame,
     materialized form (plan-gated: the refresh plan holds exactly one
     ExistingRDD and three joins).
 
-    The delta side of each term is broadcast: a refresh window is
+    The delta side of each term is small: a refresh window is
     O(ingest cadence x refresh interval) by construction -- bounded
-    by OPERATIONS, not by table size (unlike setsim's corpus-sized
-    frames) -- and a deployment whose window outgrows executor memory
-    narrows the window, the knob IVM exists to provide. The
-    complement sides (the 100 TB halves) are therefore never
-    shuffled."""
+    by OPERATIONS, not by table size -- so each term builds on its
+    delta (hinted where small-SF estimates disagree) and the complement
+    sides (the 100 TB halves) never shuffle."""
     on = F.col("l_orderkey") == F.col("o_orderkey")
     orders = spark.read.parquet(orders_dir)
     items = spark.read.parquet(lineitem_dir)
@@ -262,9 +258,10 @@ def join_view_refresh(spark: SparkSession, mv: DataFrame,
     da = _jv_orders(orders.filter(F.col("o_month") >= _JV_CUTOFF))
     b0 = _jv_items(items.filter(F.col("l_month") < _JV_CUTOFF))
     db = _jv_items(items.filter(F.col("l_month") >= _JV_CUTOFF))
-    t_a = _jv_state(b0.join(F.broadcast(da), on))        # dA |x| B0
-    t_b = _jv_state(a0.join(F.broadcast(db), on))        # A0 |x| dB
-    t_ab = _jv_state(db.join(F.broadcast(da), on))       # dA |x| dB
+    t_a = _jv_state(b0.join(da, on))   # dA |x| B0
+    # hint: at small SF the delta's files outweigh a0's; unhinted, a0 (O(table)) builds
+    t_b = _jv_state(a0.join(F.broadcast(db), on))  # A0 |x| dB
+    t_ab = _jv_state(db.join(da, on))  # dA |x| dB
     merged = merge_join_states(mv, t_a, t_b, t_ab)
     return (
         merged.select(

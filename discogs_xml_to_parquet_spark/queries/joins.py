@@ -3,10 +3,9 @@
 The reference is a single-table pipeline with no second input anywhere;
 joins are pure Spark primitives here. Scale design per query:
 
-- Star joins broadcast every dimension (explicit F.broadcast on the
-  geography dims; AQE keeps customer/supplier/orders broadcast-able as
-  SF grows until they genuinely exceed the threshold, at which point
-  they shuffle on the join key -- the correct behavior).
+- Star joins broadcast every dimension while it fits the planner's
+  threshold (session.py); past it a dimension shuffles on the join
+  key -- the correct behavior.
 - The fact table is never on the build side.
 - Non-equi band joins broadcast the tiny band table into a
   BroadcastNestedLoopJoin; the alternative (shuffle range join) is
@@ -46,7 +45,7 @@ ORDER BY revenue DESC, n_name
 )
 def q_join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5-shaped 6-table star join: local-supplier revenue by
-    nation. Geography dims are broadcast explicitly -- at 100 TB the
+    nation. The planner broadcasts the geography dims -- at 100 TB the
     only shuffles left are lineitem-orders and orders-customer on their
     keys, both AQE-coalesced."""
     li = load(spark, sf_dir, "lineitem")
@@ -56,13 +55,13 @@ def q_join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = load(spark, sf_dir, "customer")
     s = load(spark, sf_dir, "supplier")
-    n = F.broadcast(load(spark, sf_dir, "nation"))
-    r = F.broadcast(load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
+    n = load(spark, sf_dir, "nation")
+    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            F.broadcast(s),
+            s,
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
@@ -194,6 +193,7 @@ def q_join_nonequi_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
     return (
         o.join(
+            # hint: unhinted, the size estimates build the orders side
             F.broadcast(bands),
             (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi")),
         )

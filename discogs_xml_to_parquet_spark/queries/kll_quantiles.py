@@ -163,6 +163,7 @@ def q_kll_quantile_sketch(spark: SparkSession,
         ],
     )
     return (
+        # hint: ref aggregates a two-scan union (size kept); unhinted, est builds
         est.join(F.broadcast(ref), "event_type")
         .select(
             "event_type",

@@ -216,13 +216,13 @@ def blocked_pairs_df(c: DataFrame, keep_cap: int = 200,
         rank = F.row_number().over(
             w.orderBy(F.md5(F.col("c_custkey").cast("string"))))
         under = ex.join(
-            F.broadcast(over_cap),
+            over_cap,
             ["mx_ln", "band_no", "band_val"],
             "left_anti",
         )
         over = (
             ex.join(
-                F.broadcast(over_cap),
+                over_cap,
                 ["mx_ln", "band_no", "band_val"],
                 "left_semi",
             )
@@ -245,7 +245,7 @@ def blocked_pairs_df(c: DataFrame, keep_cap: int = 200,
         # digit band over-cap) the anti empties the stream map-side
         # instead of sorting the 630M-row explosion first.
         kept = ex.join(
-            F.broadcast(over_cap),
+            over_cap,
             ["mx_ln", "band_no", "band_val"],
             "left_anti",
         )
@@ -480,12 +480,11 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # single declarative plan (no driver-side counts): two 1-row
-    # aggregates cross-joined; broadcast-hinted so the planner picks
-    # BroadcastNestedLoopJoin deterministically (without the hint only
-    # AQE's runtime stats save it from a CartesianProduct)
+    # aggregates cross-joined; a global aggregate's 1-row estimate
+    # makes the planner pick BroadcastNestedLoopJoin
     return (
         first_signup.agg(F.count(F.lit(1)).alias("n_signed_up"))
-        .crossJoin(F.broadcast(converted.agg(F.count(F.lit(1)).alias("n_converted"))))
+        .crossJoin(converted.agg(F.count(F.lit(1)).alias("n_converted")))
         .select(
             "n_signed_up",
             "n_converted",
@@ -620,6 +619,7 @@ def q_fuzzy_blocked_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
     )
     return (
+        # hint: stats aggregates the staged pairs (no size stats); unhinted, sort-merge
         sampled.join(F.broadcast(stats), ["edit_dist", "ln1"])
         .select("edit_dist", "ln1", "n_pairs", "rk", "id1", "id2")
         .orderBy("edit_dist", "ln1", "rk")

@@ -126,7 +126,7 @@ def delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ins = (
         o.filter(win & (F.col("o_orderkey") % _INS_MOD == 0))
-        .crossJoin(F.broadcast(ins_base))
+        .crossJoin(ins_base)
         .select(
             (F.col("o_orderkey") + F.col("_ins_base")).alias("o_orderkey"),
             "o_custkey",
@@ -188,9 +188,8 @@ def merged_affected(window_read: DataFrame,
     delta_months = delta.select("o_month").distinct()
     survivors = (
         window_read
-        .join(F.broadcast(delta_months), on="o_month", how="left_semi")
-        .join(F.broadcast(delta.select("o_orderkey")),
-              on="o_orderkey", how="left_anti")
+        .join(delta_months, on="o_month", how="left_semi")
+        .join(delta.select("o_orderkey"), on="o_orderkey", how="left_anti")
     )
     return survivors.select(*_COLS).unionByName(delta.select(*_COLS))
 

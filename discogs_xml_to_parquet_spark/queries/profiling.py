@@ -147,7 +147,7 @@ def q_profile_columns_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in _COLS
     )
     return (
-        sketch.crossJoin(F.broadcast(exact))
+        sketch.crossJoin(exact)
         .selectExpr(
             f"stack({len(_COLS)}, {stack}) AS (col, n, n_null, "
             "n_distinct_exact, distinct_within_3rsd)"

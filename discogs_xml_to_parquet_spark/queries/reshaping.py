@@ -96,7 +96,7 @@ def q_minby_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion value is needed. s_acctbal values are distinct per nation
     in this data, so the arg is deterministic."""
     s = load(spark, sf_dir, "supplier")
-    n = F.broadcast(load(spark, sf_dir, "nation"))
+    n = load(spark, sf_dir, "nation")
     return (
         s.join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy("n_nationkey")

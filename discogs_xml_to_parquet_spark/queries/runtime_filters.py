@@ -97,6 +97,7 @@ def dpp_lane(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("yr") == 1995) & (F.col("qtr") == 1))
     )
     return (
+        # hint: the caller's session disables size-based broadcast
         fact.join(F.broadcast(dim), fact.ship_month == dim.month)
         .groupBy("month")
         .agg(

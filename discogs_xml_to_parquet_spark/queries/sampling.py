@@ -162,7 +162,7 @@ def q_sample_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     counts = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_lang"))
     tot = counts.agg(F.sum("n_lang").alias("n_total"))
-    rates = counts.crossJoin(F.broadcast(tot)).select(
+    rates = counts.crossJoin(tot).select(
         "lang",
         "n_lang",
         F.least(
@@ -179,6 +179,7 @@ def q_sample_weighted_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(_doc_hash(), 1, 8) < threshold
     )
     return (
+        # hint: rates is a cross join (estimate: product of inputs); unhinted, d builds
         d.join(F.broadcast(rates), "lang")
         .groupBy("lang", "n_lang", "rate")
         .agg(F.count(F.when(keep, 1)).alias("n_kept"))

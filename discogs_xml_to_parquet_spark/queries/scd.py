@@ -78,7 +78,7 @@ def q_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "new_bal_c"
         ),
     )
-    joined = c.join(F.broadcast(updates), "c_custkey", "left")
+    joined = c.join(updates, "c_custkey", "left")
     closed = joined.filter(F.col("new_bal_c").isNotNull()).select(
         "c_custkey", "c_mktsegment",
         F.col("c_acctbal").alias("acctbal"),

@@ -178,7 +178,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "avgdl",
         F.col("sum_dl").cast("double") / F.col("n_docs").cast("double"),
     )
-    j = tok.crossJoin(F.broadcast(stats))
+    j = tok.crossJoin(stats)
     score = None
     for i in range(len(QUERY_TERMS)):
         tf = F.col(f"tf_{i}").cast("double")

@@ -107,6 +107,13 @@ and prefix-filter theorems.
 
 from __future__ import annotations
 
+import threading
+import time
+import uuid
+from collections.abc import Callable
+from concurrent.futures import Future
+
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -182,6 +189,46 @@ def _doc_sets(docs: DataFrame) -> DataFrame:
         .filter(F.size("toks") > 0)
         .withColumn("set_id", F.md5(F.concat_ws("\x1f", "toks")))
     )
+
+
+def _overlap(sc: SparkContext, side: Callable, main: Callable) -> tuple:
+    """Run `side` on a second driver thread while this thread runs
+    `main`; return (side(), main()). The side thread is a pyspark
+    InheritableThread, so its jobs carry the caller's job group and
+    tags. Both sides' jobs also carry a private tag: the first failure
+    keeps cancelling it until the other side stops, so the error
+    surfaces without waiting for the peer job to finish."""
+    tag = f"setsim-overlap-{uuid.uuid4().hex}"
+    fut: Future = Future()
+    main_done = threading.Event()
+
+    def cancel_until(done: Callable[[], bool]) -> None:
+        # a job the peer submits after one cancellation meets the next
+        while not done():
+            sc.cancelJobsWithTag(tag)
+            time.sleep(0.1)
+
+    def run_side() -> None:
+        try:
+            fut.set_result(side())
+        except BaseException as exc:  # noqa: BLE001 -- raised by the caller
+            fut.set_exception(exc)
+            cancel_until(main_done.is_set)
+
+    sc.addJobTag(tag)
+    try:
+        InheritableThread(run_side, daemon=True).start()
+        out = main()
+    except BaseException:
+        if fut.done() and fut.exception() is not None:
+            raise fut.exception()  # main was cancelled for it
+        threading.Thread(target=cancel_until, args=(fut.done,),
+                         daemon=True).start()
+        raise
+    finally:
+        main_done.set()
+        sc.removeJobTag(tag)
+    return fut.result(), out
 
 
 def _token_dict(sets: DataFrame) -> DataFrame:
@@ -354,19 +401,15 @@ def setsim_pairs(docs: DataFrame,
     # were two driver round-trips -- a broadcast-NL cross join of the
     # two 1-row aggregates collects both in one job (measured 1.17 s
     # -> 0.80 s at sf1; pure scheduling latency, same bytes scanned).
-    # OVERLAPPED with the token-dictionary staging (r15, VERDICT r14
-    # item 6; guide 2.6 "overlap independent jobs"): the dictionary's
-    # CONTENT is gate-independent (only whether it broadcasts is
-    # gated), so its groupBy + checkpoint runs on a second driver
-    # thread while this thread collects the stats row -- two
-    # independent jobs back-filling each other's stragglers instead
-    # of two serial rungs of the staging ladder.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        tok_dict_fut = pool.submit(
-            lambda: stage_df(_token_dict(sets)))
-        set_stats = (
+    # OVERLAPPED (_overlap) with the token-dictionary staging: the
+    # dictionary's CONTENT is gate-independent (only whether it
+    # broadcasts is gated), so the two independent jobs back-fill each
+    # other's stragglers instead of running as two serial rungs.
+    sc = docs.sparkSession.sparkContext
+    tok_dict, set_stats = _overlap(
+        sc,
+        lambda: stage_df(_token_dict(sets)),
+        lambda: (
             sets.agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.coalesce(F.sum("n"), F.lit(0)).cast("long")
@@ -382,8 +425,8 @@ def setsim_pairs(docs: DataFrame,
                 )
             )
             .first()
-        )
-        tok_dict = tok_dict_fut.result()
+        ),
+    )
     n_sets = set_stats["rows"]
     slim_bytes = n_sets * _SETS_ROW_OVERHEAD
     iset_bytes = (set_stats["total_toks"] * _ITOK_BYTES
@@ -413,12 +456,10 @@ def setsim_pairs(docs: DataFrame,
 
     # membership on the surrogate key (one gated set-table join at
     # staging, then the three expansion joins all probe by long) --
-    # OVERLAPPED (r15, guide 2.6) with the ranked/isets chain below:
-    # members and ranked share no dependency once the gates are known,
-    # so the membership join+checkpoint runs on a second driver thread
-    # while this thread stages the ranked frame and the verification
-    # arrays. Two jobs in flight: enough to fill each other's task
-    # tails, not enough to fight for executors.
+    # OVERLAPPED (_overlap) with the ranked/isets chain below, which
+    # shares no dependency with it once the gates are known. Two jobs
+    # in flight fill each other's task tails without fighting for
+    # executors.
     def _stage_members() -> DataFrame:
         return (
             doc_sets.join(bc_slim(sets.select("set_id", "sid")), "set_id")
@@ -426,15 +467,14 @@ def setsim_pairs(docs: DataFrame,
             .transform(stage_df)
         )
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        members_fut = pool.submit(_stage_members)
-        # 2. every (set, token) row with its interned tid and rarity
-        # position (see _ranked_tokens), staged ONCE: the prefix
-        # filter (both sides of the candidate self-join), and the
-        # verification-array rebuild below, all read it. The window's
-        # exchange left the staged partitions keyed by sid, so the
-        # groupBy(sid) that re-assembles each set's SORTED LONG array
-        # adds no shuffle.
+    # 2. every (set, token) row with its interned tid and rarity
+    # position (see _ranked_tokens), staged ONCE: the prefix
+    # filter (both sides of the candidate self-join), and the
+    # verification-array rebuild below, all read it. The window's
+    # exchange left the staged partitions keyed by sid, so the
+    # groupBy(sid) that re-assembles each set's SORTED LONG array
+    # adds no shuffle.
+    def _stage_ranked() -> tuple[DataFrame, DataFrame]:
         ranked = stage_df(
             _ranked_tokens(sets, bc_dict=bc_dict, tok_dict=tok_dict))
         isets = (
@@ -445,7 +485,9 @@ def setsim_pairs(docs: DataFrame,
             )
             .transform(stage_df)
         )
-        members = members_fut.result()
+        return ranked, isets
+
+    members, (ranked, isets) = _overlap(sc, _stage_members, _stage_ranked)
     prefix = _prefix_filter(ranked)
     a, b = prefix.alias("a"), prefix.alias("b")
     # LENGTH filter: J >= t forces t*max(|A|,|B|) <= min(|A|,|B|).

@@ -54,9 +54,6 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.brute_force_topk(e.filter(F.col("id") < 5), e, k=5).orderBy("q_id", "rank")
 
 
-_planes_sql = S.planes_sql
-
-
 @query(
     "q_ann_lsh_buckets",
     oracle=f"""
@@ -120,7 +117,7 @@ def q_ann_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("vec_id").orderBy("dist2", "c_id")
     return (
-        e.crossJoin(F.broadcast(cent))
+        e.crossJoin(cent)
         .select(F.col("id").alias("vec_id"), "c_id", dist2.alias("dist2"))
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
@@ -143,7 +140,7 @@ def _ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("vec_id").orderBy("dist2", "c_id")
     return (
-        e.crossJoin(F.broadcast(cent))
+        e.crossJoin(cent)
         .select(
             F.col("id").alias("vec_id"), "v", "c_id", dist2.alias("dist2")
         )
@@ -219,7 +216,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = (
         e.filter(F.col("id") < 5)
         .select(F.col("id").alias("q_id"), F.col("v").alias("q_v"))
-        .crossJoin(F.broadcast(cent))
+        .crossJoin(cent)
         .withColumn("dist2", dist2)
         .withColumn("rk", F.row_number().over(w_probe))
         .filter(F.col("rk") <= 2)
@@ -227,6 +224,7 @@ def q_ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = _ivf_assignments(spark, sf_dir)
     cand = (
+        # hint: assigned is staged (no size stats); unhinted, sort-merge join
         F.broadcast(probes)
         .join(assigned, assigned["centroid_id"] == probes["probe_centroid"])
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -303,6 +301,7 @@ def q_ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("probe_bucket"),
         )
     )
+    # hint: explode_outer hides the probe fan-out; unhinted the corpus builds
     cand = F.broadcast(probes).join(
         n,
         (n["bucket"] == probes["probe_bucket"]) & (n["id"] != probes["q_id"]),

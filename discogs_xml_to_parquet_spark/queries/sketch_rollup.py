@@ -138,6 +138,7 @@ def q_hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
+        # hint: countDistinct's Expand inflates ref's estimate; unhinted, rolled builds
         rolled.join(F.broadcast(ref), "event_type")
         .select(
             "event_type",

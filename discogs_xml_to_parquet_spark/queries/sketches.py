@@ -67,6 +67,7 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("l_partkey").alias("n_parts_exact"),
     )
     return (
+        # hint: countDistinct's Expand inflates exact's estimate; unhinted, sketch builds
         sketch.join(F.broadcast(exact), "l_returnflag")
         .select(
             "l_returnflag",
@@ -256,12 +257,13 @@ def q_freq_items_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rc"),
     ).select("l_suppkey", "n_exact", "rc.r", "rc.c")
     est = (
+        # hint: explode hides the probe fan-out; unhinted the probe side builds
         probes.join(F.broadcast(cms), ["r", "c"])
         .groupBy("l_suppkey", "n_exact")
         .agg(F.min("n").alias("_est"))
     )
     return (
-        est.crossJoin(F.broadcast(n_total))
+        est.crossJoin(n_total)
         .select(
             "l_suppkey",
             "n_exact",

@@ -228,7 +228,7 @@ def snapshot_scan(spark: SparkSession, version_root: str,
                 F.col("_metadata.row_index").alias("_dv_ri"),
             )
             .join(
-                F.broadcast(dv),
+                dv,
                 (F.col("_dv_fp") == F.col("file_path"))
                 & (F.col("_dv_ri") == F.col("row_pos")),
                 "left_anti",

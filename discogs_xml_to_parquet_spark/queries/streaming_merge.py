@@ -182,7 +182,7 @@ def apply_batch(spark: SparkSession, root: Path,
             keys = spark.read.parquet(spill).select(
                 "o_orderkey").withColumn("_hit", F.lit(True))
             merged = (
-                current_read.join(F.broadcast(keys), "o_orderkey", "left")
+                current_read.join(keys, "o_orderkey", "left")
                 .select(
                     "o_orderkey", "o_custkey",
                     F.when(F.col("_hit"), F.lit("U"))

@@ -512,7 +512,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     enriched = (
-        stream.join(F.broadcast(user_dim), "user_id")
+        stream.join(user_dim, "user_id")
         .groupBy("cohort", "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),

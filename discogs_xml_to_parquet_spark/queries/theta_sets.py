@@ -131,7 +131,7 @@ def retention_from_sketches(spark: SparkSession, sketch_dir: str,
             .otherwise(F.theta_sketch_estimate("sk_w3"))
             .alias("est_w3"),
         ]
-    return w1.join(F.broadcast(w3), "event_type", "left").select(*cols)
+    return w1.join(w3, "event_type", "left").select(*cols)
 
 
 @query(
@@ -206,6 +206,7 @@ def q_theta_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = (F.col("users_w1") + F.col("users_w3")
             - F.col("retained")) * _BAND
     return (
+        # hint: est is a join (estimate: product of its inputs); unhinted, sort-merge
         exact.join(F.broadcast(est), "event_type")
         .select(
             "event_type",

@@ -151,10 +151,11 @@ def q_gapfill_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
             ).alias("hour")
         )
+        # hint: the exploded hour spine estimates small; unhinted it would build
         .crossJoin(F.broadcast(cells.select("event_type").distinct()))
     )
     return (
-        spine.join(F.broadcast(cells), ["hour", "event_type"], "left")
+        spine.join(cells, ["hour", "event_type"], "left")
         .select(
             F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
             "event_type",

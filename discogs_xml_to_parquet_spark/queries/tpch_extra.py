@@ -37,7 +37,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1996-07-01 00:00:00").cast("timestamp_ntz"))
     )
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = F.broadcast(load(spark, sf_dir, "nation"))
+    n = load(spark, sf_dir, "nation")
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -70,7 +70,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-02-01 00:00:00").cast("timestamp_ntz"))
     )
-    p = F.broadcast(load(spark, sf_dir, "part"))
+    p = load(spark, sf_dir, "part")
     net = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo_net = F.when(F.col("p_type") == "PROMO", net).otherwise(F.lit(0.0))
     return (
@@ -162,11 +162,9 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
     )
     li = load(spark, sf_dir, "lineitem")
-    s = F.broadcast(load(spark, sf_dir, "supplier"))
-    n = F.broadcast(load(spark, sf_dir, "nation"))
-    r = F.broadcast(
-        load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    )
+    s = load(spark, sf_dir, "supplier")
+    n = load(spark, sf_dir, "nation")
+    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -242,7 +240,7 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerating to a cross product. part broadcasts; single-row
     global aggregate; n_rows pins the branch cardinality."""
     li = load(spark, sf_dir, "lineitem")
-    p = F.broadcast(load(spark, sf_dir, "part"))
+    p = load(spark, sf_dir, "part")
     q = F.col("l_quantity")
     arm = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
@@ -322,10 +320,8 @@ def q21_suppliers_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     s = load(spark, sf_dir, "supplier")
-    n = F.broadcast(
-        load(spark, sf_dir, "nation").filter(
-            F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
-        )
+    n = load(spark, sf_dir, "nation").filter(
+        F.col("n_name").isin("NATION_1", "NATION_2", "NATION_3")
     )
     l1 = li.filter(F.col("l_returnflag") == "R")
     return (

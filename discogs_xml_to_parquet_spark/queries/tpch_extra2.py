@@ -99,7 +99,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     one 0.2x multiply -- the comparison cannot flip at the boundary.
     The output dollar sum goes through the scaled-integer fold
     (functions/exact.py); n_rows pins the filter cardinality."""
-    pq = F.broadcast(
+    pq = (
         load(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#3") & (F.col("p_type") == "SMALL"))
         .select("p_partkey")
@@ -153,6 +153,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pair = load(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_20", "NATION_11")
     )
+    # hints: a join estimates the product of its inputs (s, c); at small SF
+    # supplier estimates below n_pair
     s = F.broadcast(
         load(spark, sf_dir, "supplier")
         .join(F.broadcast(n_pair), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -160,7 +162,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = F.broadcast(
         load(spark, sf_dir, "customer")
-        .join(F.broadcast(n_pair), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(n_pair, F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     o = load(spark, sf_dir, "orders").join(
@@ -240,7 +242,7 @@ def q22_idle_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority") == "1-URGENT"
     ).select("o_custkey")
     return (
-        cust.crossJoin(F.broadcast(stats))
+        cust.crossJoin(stats)
         .filter(
             scaled("c_acctbal").cast("decimal(38,0)") * F.col("n")
             > F.col("tot")
@@ -303,9 +305,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # one aggregate serves MAX and the join-back
     )
     mx = rev.agg(F.max("r").alias("mx"))
-    s = F.broadcast(load(spark, sf_dir, "supplier"))
+    s = load(spark, sf_dir, "supplier")
     return (
-        rev.join(F.broadcast(mx), F.col("r") == F.col("mx"))
+        rev.join(mx, F.col("r") == F.col("mx"))
         .join(s, F.col("s_suppkey") == F.col("l_suppkey"))
         .select("s_suppkey", "s_name", unscale(F.col("r")).alias("total_revenue"))
         .orderBy("s_suppkey")

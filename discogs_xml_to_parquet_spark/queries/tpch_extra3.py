@@ -26,10 +26,6 @@ from discogs_xml_to_parquet_spark.functions.exact import dsum
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.tables import load
 
-_VOL_SQL = ("CAST(SUM(CAST(floor((l_extendedprice * (1 - l_discount)) "
-            "* 1000000 + 0.5) AS BIGINT)) AS DOUBLE) / 1000000")
-
-
 @query(
     "q4_order_priority",
     oracle="""
@@ -136,26 +132,26 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer-backed doubles, so it is bit-identical across
     engines (IEEE division of identical inputs)."""
     nation = load(spark, sf_dir, "nation")
+    # hint: a join estimates the product of its inputs; unhinted, orders builds
     asia_cust = F.broadcast(
         load(spark, sf_dir, "customer")
-        .join(F.broadcast(nation),
-              F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .join(
-            F.broadcast(load(spark, sf_dir, "region")
-                        .filter(F.col("r_name") == "ASIA")),
+            load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("c_custkey")
     )
+    # hint: unhinted, AQE's final plan for this join varied run to run
     promo_parts = F.broadcast(
         load(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey")
     )
-    supp_nat = F.broadcast(
+    supp_nat = (
         load(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation),
-              F.col("s_nationkey") == F.col("n_nationkey"))
+        # hint: at small SF supplier estimates below nation; unhinted, supplier builds
+        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     o = (

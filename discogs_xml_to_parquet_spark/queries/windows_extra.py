@@ -98,11 +98,11 @@ def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     rev = (
-        o.join(F.broadcast(c.select("c_custkey", "c_nationkey")),
+        o.join(c.select("c_custkey", "c_nationkey"),
                o["o_custkey"] == F.col("c_custkey"))
-        .join(F.broadcast(n.select("n_nationkey", "n_name", "n_regionkey")),
+        .join(n.select("n_nationkey", "n_name", "n_regionkey"),
               F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r.select("r_regionkey", "r_name")),
+        .join(r.select("r_regionkey", "r_name"),
               F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy(F.col("n_name").alias("nation"),
                  F.col("r_name").alias("region"))

@@ -6,8 +6,13 @@ and merely *also* work on local[N]:
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
   and dynamic join-strategy demotion are the main levers that keep a
   static plan healthy at 100x the data.
-- Broadcast threshold raised: the dimension tables of a star schema
-  (region/nation/customer-sized) must never shuffle the fact table.
+- One broadcast policy: the planner's size threshold (raised to 64 MB
+  so star-schema dimensions never shuffle the fact table) decides.
+  Query code hints `F.broadcast` only where the estimate misleads the
+  planner (filters, aggregates, Generates, joins and checkpoints hide a
+  frame's real size) or a measured gate allows it (setsim), each with a
+  one-line reason. A hint on a table that grows with scale overrides
+  the size check unconditionally.
 - Arrow enabled: every Python-boundary crossing (pandas UDFs, toPandas)
   is Arrow-batched, never row-at-a-time pickling.
 """
@@ -15,10 +20,15 @@ and merely *also* work on local[N]:
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Executor-side Python (strict lane, Python DataSource, pandas UDFs)
+# imports this package even when the driver found it on sys.path alone.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(app_name: str = "discogs-xml-to-parquet-spark",
@@ -37,6 +47,8 @@ def get_spark(app_name: str = "discogs-xml-to-parquet-spark",
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # merged with the worker's own PYTHONPATH, not a replacement
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # Long-lived sessions (the bench runs ~200 queries in one JVM;
         # a notebook or job server does the same) accumulate
         # localCheckpoint RDD blocks: the ContextCleaner only frees a

@@ -174,13 +174,13 @@ def _to_output(df: DataFrame, *extra: "F.Column") -> DataFrame:
     )
 
 
-def read_releases(spark: SparkSession, path: str,
-                  mode: str = "FAILFAST") -> DataFrame:
-    """Scale path: native XML source, explicit schema, FAILFAST."""
+def read_releases(spark: SparkSession, path: str) -> DataFrame:
+    """Scale path: native XML source, explicit schema, FAILFAST (the
+    quarantine lane is read_releases_permissive)."""
     raw = (
         spark.read.format("xml")
         .option("rowTag", "release")
-        .option("mode", mode)
+        .option("mode", "FAILFAST")
         .schema(XML_READ_SCHEMA)
         .load(path)
     )

@@ -16,11 +16,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-# Dimension tables small enough that joins against them must always be
-# broadcast at any realistic scale factor (region/nation are bounded by
-# geography; supplier/part/customer grow with SF but stay << lineitem).
-BROADCAST_DIMS = {"region", "nation", "supplier"}
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -71,10 +66,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select(
         "event_id", ts.alias("ts"), "user_id", "event_type", "value", "props"
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def load_spread(spark: SparkSession, sf_dir: str, name: str,

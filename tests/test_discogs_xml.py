@@ -408,7 +408,7 @@ def test_native_failfast_malformed_bool(spark, tmp_path):
     from pyspark.errors.exceptions.base import PySparkException
 
     with pytest.raises((PySparkException, Py4JJavaError)):
-        dx.read_releases(spark, str(p), mode="FAILFAST").collect()
+        dx.read_releases(spark, str(p)).collect()
 
 
 def test_two_phase_cc_matches_min_label(spark):
@@ -487,3 +487,32 @@ def test_two_phase_cc_keeps_self_loop_nodes(spark):
         for r in connected_components_two_phase(edges).collect()
     }
     assert two == base == {(5, 5), (1, 1), (2, 1)}
+
+
+def test_cli_strict_from_any_cwd(tmp_path):
+    """The strict lane's parser runs in executor-side Python workers,
+    which must import this package even when the CLI starts outside
+    the repo root with the package on sys.path but not on PYTHONPATH."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    src = tmp_path / "releases.xml"
+    src.write_text(FIXTURE)
+    out = tmp_path / "out"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    code = (
+        f"import sys; sys.path.insert(0, {repo!r}); "
+        "from discogs_xml_to_parquet_spark.sources.discogs_xml import main; "
+        f"main([{str(src)!r}, {str(out)!r}, '--strict'])"
+    )
+    proc = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                          env=env, capture_output=True, text=True,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    ids = sorted(pq.read_table(out).column("id").to_pylist())
+    assert ids == sorted(EXPECTED)
