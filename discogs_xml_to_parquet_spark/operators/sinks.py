@@ -1,5 +1,5 @@
-"""Parquet sink layouts beyond the reference's single file
-(main.rs:219-226): partitioned, size-targeted, and single-file writes.
+"""Partitioned Parquet sink, beyond the reference's single file
+(main.rs:219-226; `convert(single_file=True)` keeps that layout).
 
 Layout decisions are the write-side half of every scan optimization:
 - partitionBy on a low-cardinality pruning key (date, lang, bucket)
@@ -14,24 +14,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+_MAX_RECORDS_PER_FILE = 1_000_000
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      max_records_per_file: int = 1_000_000,
-                      compact: bool = True) -> None:
-    """Partitioned snappy parquet; `compact` pre-shuffles rows to their
-    partition key so each key writes one file per key (avoiding the
-    tasks x keys small-file explosion)."""
-    out = df.repartition(*partition_cols) if compact else df
+
+def write_partitioned(df: DataFrame, path: str,
+                      partition_cols: list[str]) -> None:
+    """Partitioned snappy parquet, pre-shuffled to the partition key so
+    each key writes one file (avoiding the tasks x keys small-file
+    explosion), capped at _MAX_RECORDS_PER_FILE rows per file."""
     (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        df.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", _MAX_RECORDS_PER_FILE)
         .partitionBy(*partition_cols)
         .parquet(path, compression="snappy")
     )
-
-
-def write_single_file(df: DataFrame, path: str) -> None:
-    """Byte-layout parity with the reference's one output file
-    (main.rs:223): only for small results -- a single writer task is
-    the anti-pattern at scale."""
-    df.coalesce(1).write.mode("overwrite").parquet(path, compression="snappy")

@@ -39,12 +39,12 @@ compaction trigger, demonstrated by apply_deletion_vectors.
 
 from __future__ import annotations
 
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.queries.merge import (
     staged_partitioned_orders,
@@ -58,23 +58,6 @@ _PDEL_MOD = 13  # the positional lane's predicate -- distinct modulus,
                 # so neither lane can satisfy the other's oracle
 
 
-def _stat_inventory(root: str) -> dict[str, tuple[int, int]]:
-    """Visible data files under `root` -> (size, mtime_ns): the cheap
-    stat-only untouched check for the in-row fact. ADVICE r11: the
-    md5 inventory (merge._inventory) reads every base byte, twice per
-    run, in a lane whose pitch is O(delta) write cost -- and
-    q_delete_merge_on_read is in bench.py's sf1 lane. BYTE-level
-    identity stays pinned where it belongs: the pytest
-    (test_delete_leaves_base_byte_identical) still runs the full md5
-    pass once; the driver row's boolean needs only 'no file was
-    rewritten, resized, or removed', which stat proves without I/O."""
-    return {
-        str(p.relative_to(root)): (p.stat().st_size, p.stat().st_mtime_ns)
-        for p in sorted(Path(root).rglob("*"))
-        if p.is_file() and not p.name.startswith(("_", "."))
-    }
-
-
 def delete_keys(spark: SparkSession, base: str) -> DataFrame:
     """The DELETE predicate's key set, column-pruned to (partition,
     key) -- what a format writes into its delete files."""
@@ -85,32 +68,41 @@ def delete_keys(spark: SparkSession, base: str) -> DataFrame:
     )
 
 
+def _write_delete_files(base: str, dv_dir: str,
+                        sidecars: DataFrame) -> tuple[int, bool, bool]:
+    """Write a DELETE's per-partition `sidecars` under `dv_dir`.
+    Returns (months with sidecars, base untouched, sidecar bytes
+    below what copy-on-write would have rewritten)."""
+    # stat, not md5 (ADVICE r11): q_delete_merge_on_read is in
+    # bench.py's sf1 lane, and md5 would read every base byte twice
+    before = tablefmt.stat_inventory(base)
+    sidecars.write.mode("overwrite").partitionBy("o_month").parquet(dv_dir)
+    after = tablefmt.stat_inventory(base)
+    dv_bytes = sum(
+        p.stat().st_size for p in Path(dv_dir).rglob("*.parquet"))
+    months = set(tablefmt.partitions(dv_dir))
+    # what copy-on-write would have rewritten: the FULL bytes of every
+    # partition holding at least one deleted row
+    cow_bytes = sum(
+        sz for rel, (sz, _m) in before.items()
+        if rel.split("/", 1)[0] in months
+    )
+    return len(months), before == after, 0 < dv_bytes < cow_bytes
+
+
 def write_deletion_vectors(spark: SparkSession, sf_dir: str,
                            base: str) -> tuple[str, dict]:
     """Execute the merge-on-read DELETE: write per-partition key
     sidecars under a `_dv` root and leave the base byte-identical.
     Returns (dv_dir, layout facts)."""
     dv_dir = _work_dir("dv_sidecar", sf_dir)
-    before = _stat_inventory(base)
-    delete_keys(spark, base).write.mode("overwrite").partitionBy(
-        "o_month").parquet(dv_dir)
-    after = _stat_inventory(base)
-    dv_bytes = sum(
-        p.stat().st_size for p in Path(dv_dir).rglob("*.parquet"))
-    dv_months = {
-        d.name for d in Path(dv_dir).glob("o_month=*") if d.is_dir()}
-    # what copy-on-write would have rewritten: the FULL bytes of every
-    # partition holding at least one deleted key
-    cow_bytes = sum(
-        sz for rel, (sz, _m) in before.items()
-        if rel.split("/", 1)[0] in dv_months
-    )
-    facts = {
-        "n_dv_months": len(dv_months),
-        "base_untouched": before == after,
-        "dv_smaller_than_rewrite": 0 < dv_bytes < cow_bytes,
+    n, untouched, smaller = _write_delete_files(
+        base, dv_dir, delete_keys(spark, base))
+    return dv_dir, {
+        "n_dv_months": n,
+        "base_untouched": untouched,
+        "dv_smaller_than_rewrite": smaller,
     }
-    return dv_dir, facts
 
 
 def mor_read(spark: SparkSession, base: str, dv_dir: str) -> DataFrame:
@@ -131,37 +123,28 @@ def mor_read(spark: SparkSession, base: str, dv_dir: str) -> DataFrame:
     return spark.read.parquet(base).join(dv, on="o_orderkey", how="left_anti")
 
 
-def apply_deletion_vectors(spark: SparkSession, base: str,
-                           dv_dir: str) -> list[str]:
-    """MOR -> COW compaction: fold the sidecars into data files by
-    rewriting the affected partitions (the merge.py swap discipline)
-    and dropping their DVs. After this, a plain scan with no merge tax
-    equals the MOR read -- pinned in tests. Returns rewritten months.
+def apply_deletion_vectors(spark: SparkSession, base: str, dv_dir: str,
+                           read=mor_read) -> list[str]:
+    """MOR -> COW compaction, for either sidecar form (`read` is its
+    merge-on-read scan): fold the sidecars into data files by
+    rewriting the affected partitions (tablefmt.swap; a delete that
+    empties a partition drops it) and dropping their DVs. After this,
+    a plain scan with no merge tax equals the MOR read -- pinned in
+    tests. Returns rewritten months.
 
     Production would trigger this per partition when its deleted
     fraction crosses a threshold; here every DV'd partition compacts,
     the threshold=0 case."""
-    months = sorted(
-        d.name for d in Path(dv_dir).glob("o_month=*") if d.is_dir())
+    months = tablefmt.partitions(dv_dir)
     if not months:
         return []
-    live = mor_read(spark, base, dv_dir).filter(
+    live = read(spark, base, dv_dir).filter(
         F.col("o_month").isin([m.split("=", 1)[1] for m in months]))
-    import tempfile
-
-    newver = tempfile.mkdtemp(prefix="spark_graft_dv_compact_")
-    live.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    for m in months:
-        dst = Path(base) / m
-        src = Path(newver) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        # a delete may empty a partition entirely: drop, don't move
-        if src.exists():
-            shutil.move(str(src), str(dst))
-        shutil.rmtree(Path(dv_dir) / m, ignore_errors=True)
-    shutil.rmtree(newver, ignore_errors=True)
-    return months
+    return tablefmt.swap(
+        base,
+        lambda tmp: live.write.mode("overwrite").partitionBy(
+            "o_month").parquet(tmp),
+        months, sidecar_root=dv_dir)
 
 
 # ---- positional deletion vectors (r12, VERDICT r11 item 5) ----------
@@ -183,30 +166,20 @@ def write_positional_dvs(spark: SparkSession, sf_dir: str,
     partition under a `_pdv` root, leave the base untouched. Returns
     (pdv_dir, layout facts)."""
     pdv_dir = _work_dir("pdv_sidecar", sf_dir)
-    before = _stat_inventory(base)
-    (
+    n, untouched, smaller = _write_delete_files(
+        base, pdv_dir,
         spark.read.parquet(base)
         .filter(F.col("o_orderkey") % _PDEL_MOD == 0)
         .select(
             F.col("_metadata.file_path").alias("file_path"),
             F.col("_metadata.row_index").alias("row_pos"),
             "o_month",
-        )
-        .write.mode("overwrite").partitionBy("o_month").parquet(pdv_dir)
-    )
-    after = _stat_inventory(base)
-    pdv_bytes = sum(
-        p.stat().st_size for p in Path(pdv_dir).rglob("*.parquet"))
-    pdv_months = {
-        d.name for d in Path(pdv_dir).glob("o_month=*") if d.is_dir()}
-    cow_bytes = sum(
-        sz for rel, (sz, _m) in before.items()
-        if rel.split("/", 1)[0] in pdv_months
+        ),
     )
     return pdv_dir, {
-        "n_pdv_months": len(pdv_months),
-        "base_untouched": before == after,
-        "pdv_smaller_than_rewrite": 0 < pdv_bytes < cow_bytes,
+        "n_pdv_months": n,
+        "base_untouched": untouched,
+        "pdv_smaller_than_rewrite": smaller,
     }
 
 
@@ -240,30 +213,9 @@ def positional_read(spark: SparkSession, base: str,
 
 def apply_positional_dvs(spark: SparkSession, base: str,
                          pdv_dir: str) -> list[str]:
-    """MOR -> COW compaction for the positional form: rewrite the
-    affected partitions from the positional read and drop their
-    delete files -- after it, a plain scan equals the MOR read
-    (pytest-pinned), mirroring apply_deletion_vectors."""
-    months = sorted(
-        d.name for d in Path(pdv_dir).glob("o_month=*") if d.is_dir())
-    if not months:
-        return []
-    live = positional_read(spark, base, pdv_dir).filter(
-        F.col("o_month").isin([m.split("=", 1)[1] for m in months]))
-    import tempfile
-
-    newver = tempfile.mkdtemp(prefix="spark_graft_pdv_compact_")
-    live.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    for m in months:
-        dst = Path(base) / m
-        src = Path(newver) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        if src.exists():
-            shutil.move(str(src), str(dst))
-        shutil.rmtree(Path(pdv_dir) / m, ignore_errors=True)
-    shutil.rmtree(newver, ignore_errors=True)
-    return months
+    """The compaction of apply_deletion_vectors over the positional
+    read."""
+    return apply_deletion_vectors(spark, base, pdv_dir, positional_read)
 
 
 _REV_SQL = rev_sql("o_totalprice")

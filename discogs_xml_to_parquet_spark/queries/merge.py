@@ -14,10 +14,9 @@ must NOT rewrite the table; it must
      BROADCAST (a MERGE delta is update-batch-sized, never
      fact-sized),
   3. write the merged partitions as NEW files and commit by an atomic
-     partition swap (the manifest/pointer flip of a real table
-     format, spelled as directory renames on a filesystem) -- rows in
-     untouched partitions are never read, never rewritten, and their
-     files stay byte-identical.
+     partition swap (`tablefmt.swap`) -- rows in untouched partitions
+     are never read, never rewritten, and their files stay
+     byte-identical.
 
 Both halves of the contract ride in the driver row: the relational
 oracle reconstructs the merged table from `orders` in pure SQL (so a
@@ -53,14 +52,13 @@ byte ratios are the whole cost model.
 
 from __future__ import annotations
 
-import hashlib
 import shutil
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from discogs_xml_to_parquet_spark import tablefmt
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import (
@@ -69,6 +67,7 @@ from discogs_xml_to_parquet_spark.staging import (
     work_dir as _work_dir,
 )
 from discogs_xml_to_parquet_spark.tables import load
+from discogs_xml_to_parquet_spark.tablefmt import inventory as _inventory
 
 _UPD_MOD = 7             # update keys: o_orderkey % 7 == 0 in-window
 _INS_MOD = 13            # insert seeds: o_orderkey % 13 == 0 in-window
@@ -140,35 +139,6 @@ def delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_month", F.date_format("o_orderdate", "yyyy-MM"))
 
 
-def _link_or_copy(src: str, dst: str) -> None:
-    """Hardlink when possible, byte-copy across filesystems (ADVICE
-    r12: os.link raises EXDEV if SPARK_LOCAL_DIRS/tmpdir overrides
-    land the staged base and the scratch on different mounts; both
-    sit under tempfile.gettempdir() today, so the link path is the
-    one actually taken). Shared by every lane that clones its staged
-    base for harness isolation (TTL since r12; MERGE since the r14
-    optimization round)."""
-    import os
-
-    try:
-        os.link(src, dst)
-    except OSError:
-        shutil.copy2(src, dst)
-
-
-def _inventory(root: str) -> dict[str, tuple[int, str]]:
-    """Visible data files under `root` -> (size, md5). Hidden
-    sidecars (.crc, _SUCCESS) excluded: the contract is about data
-    files, the things a table format's manifest points at."""
-    out: dict[str, tuple[int, str]] = {}
-    for p in sorted(Path(root).rglob("*")):
-        if not p.is_file() or p.name.startswith(("_", ".")):
-            continue
-        out[str(p.relative_to(root))] = (
-            p.stat().st_size, hashlib.md5(p.read_bytes()).hexdigest())
-    return out
-
-
 def affected_read(spark: SparkSession, scratch: str) -> DataFrame:
     """The pruned base read: only the delta's partition range. The
     month predicate is on the PARTITION column, so the scan carries
@@ -197,9 +167,9 @@ def merged_affected(window_read: DataFrame,
 def merge_upsert(spark: SparkSession, scratch: str,
                  delta: DataFrame) -> list[str]:
     """Execute the copy-on-write MERGE against the table at `scratch`
-    in place: write merged affected partitions as new files under a
-    temp version dir, then commit by swapping those partition dirs.
-    Returns the list of swapped partition dir names.
+    in place: write merged affected partitions as new files, then
+    commit by swapping those partition dirs (tablefmt.swap). Returns
+    the list of swapped partition dir names.
 
     The rewrite set is DELTA-DRIVEN: the statically-pruned window
     read is further restricted (broadcast semi join) to the months
@@ -209,35 +179,30 @@ def merge_upsert(spark: SparkSession, scratch: str,
     pruning a real MERGE runs: coarse static range from the job spec,
     exact partition set from the delta's own stats."""
     merged = merged_affected(affected_read(spark, scratch), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_merge_newver_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    months = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-    _check_months_in_window(months, newver)
-    for m in months:  # the "manifest flip": driver-side renames only
-        dst = Path(scratch) / m
-        if dst.exists():
-            shutil.rmtree(dst)
-        shutil.move(str(Path(newver) / m), str(dst))
-    shutil.rmtree(newver, ignore_errors=True)
-    return months
+    return tablefmt.swap(scratch, _writer(merged),
+                         check=_check_months_in_window)
+
+
+def _writer(merged: DataFrame):
+    """The temp write a tablefmt commit or swap moves partitions from."""
+    return lambda tmp: merged.write.mode("overwrite").partitionBy(
+        "o_month").parquet(tmp)
 
 
 def _month_of(relpath: str) -> str:
     return relpath.split("/", 1)[0]
 
 
-def _check_months_in_window(months: list[str], newver: str) -> None:
+def _check_months_in_window(months: list[str]) -> None:
     """Abort (before anything is swapped or published) if the merged
     write produced a partition OUTSIDE affected_read's static window:
     such a partition holds ONLY delta rows -- its pre-existing base
     rows were pruned away, so committing it would silently destroy
-    them (ADVICE r10). The new version dir is removed, so the failed
+    them (ADVICE r10). tablefmt removes the temp write, so the failed
     merge leaves the table byte-identical."""
     bad = [m for m in months
            if not (_MONTH_LO <= m.split("=", 1)[1] <= _MONTH_HI)]
     if bad:
-        shutil.rmtree(newver, ignore_errors=True)
         raise ValueError(
             f"merge delta touches months {bad} outside the pruned read "
             f"window [{_MONTH_LO}, {_MONTH_HI}]; committing would drop "
@@ -258,7 +223,7 @@ def run_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     # (affected dirs are rmtree'd and REPLACED with new files; the
     # inventory only reads), so the shared base's inodes stay
     # untouched -- pinned by the untouched_preserved boolean itself.
-    shutil.copytree(base, scratch, copy_function=_link_or_copy)
+    shutil.copytree(base, scratch, copy_function=tablefmt.link_or_copy)
     before = _inventory(scratch)
     months = merge_upsert(spark, scratch, delta_frame(spark, sf_dir))
     after = _inventory(scratch)
@@ -358,14 +323,12 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- time travel: versioned manifests over the same COW merge --------
 
 def versioned_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
-    """The MERGE as a real table format runs it: version v0 is a
-    MANIFEST (a directory of per-partition pointers -- symlinks here,
-    manifest entries in Delta/Iceberg) over the staged base's files;
-    the merge writes its affected partitions as NEW directories and
-    publishes version v1 as a second manifest that points at the new
-    dirs for affected months and at THE SAME underlying dirs as v0
-    for everything else. Readers resolve the `_current` pointer file
-    (flipped atomically: write-temp + rename); old readers keep v0.
+    """The MERGE as a real table format runs it (the versioned format
+    of tablefmt): version v0 is a manifest of pointers over the staged
+    base's partitions; the merge publishes v1, whose affected months
+    are NEW directories and whose other months point at THE SAME
+    underlying dirs as v0. Readers resolve `_current`; old readers
+    keep v0.
 
     What this buys at 100 TB: storage for a new version is O(affected
     bytes) (`n_shared` months cost nothing -- pinned by symlink
@@ -374,34 +337,11 @@ def versioned_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     readable table. Returns (table root, facts)."""
     base = staged_partitioned_orders(spark, sf_dir)
     table = Path(_work_dir("ttable", sf_dir))
-    table.mkdir()
-    months = sorted(p.name for p in Path(base).glob("o_month=*")
-                    if p.is_dir())
-    v0 = table / "v0"
-    v0.mkdir()
-    for m in months:
-        (v0 / m).symlink_to(Path(base) / m)
-
-    delta = delta_frame(spark, sf_dir)
-    merged = merged_affected(affected_read(spark, str(v0)), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_ttable_new_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    rewritten = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-
-    v1 = table / "v1"
-    v1.mkdir()
-    for m in rewritten:
-        shutil.move(str(Path(newver) / m), str(v1 / m))
-    for m in months:
-        if m not in rewritten:
-            (v1 / m).symlink_to((v0 / m).resolve())
-    shutil.rmtree(newver, ignore_errors=True)
-    # atomic publish: readers see either the old or the new pointer
-    ptr_tmp = table / "_current.tmp"
-    ptr_tmp.write_text("v1")
-    ptr_tmp.rename(table / "_current")
-
+    tablefmt.create(table, base)
+    publish_next_version(spark, str(table), delta_frame(spark, sf_dir))
+    v0, v1 = table / "v0", table / "v1"
+    months = tablefmt.partitions(base)
+    rewritten = [m for m in months if not (v1 / m).is_symlink()]
     shared = [m for m in months if m not in rewritten]
     facts = {
         "rewritten": rewritten,
@@ -411,9 +351,8 @@ def versioned_merge(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
         "storage_shared": all(
             (v1 / m).resolve() == (v0 / m).resolve() for m in shared),
         # snapshot isolation: v0 still lists every month as before
-        "v0_intact": sorted(
-            p.name for p in v0.glob("o_month=*")) == months,
-        "current": (table / "_current").read_text(),
+        "v0_intact": tablefmt.partitions(v0) == months,
+        "current": tablefmt.current(table),
     }
     return str(table), facts
 
@@ -468,17 +407,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = facts["current"]
 
     def snap(version: str, tag: str) -> DataFrame:
-        return (
-            spark.read.parquet(str(Path(table) / version))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum(F.col("o_totalprice")).alias("revenue"),
-                F.count(F.when(
-                    F.col("o_orderstatus").isin("U", "I"), 1)).alias(
-                        "n_changed"),
-            )
-            .withColumn("version", F.lit(tag))
-        )
+        return _snapshot_stats(spark, table, version, tag, ("U", "I"))
 
     return (
         snap("v0", "v0").unionByName(snap(cur, "v1"))
@@ -491,6 +420,23 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _snapshot_stats(spark: SparkSession, table: str, version: str,
+                    tag: str, changed: tuple[str, ...]) -> DataFrame:
+    """One version's checksum row: rows, exact revenue, and rows whose
+    status is in `changed`, tagged `tag`."""
+    return (
+        spark.read.parquet(str(Path(table) / version))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum(F.col("o_totalprice")).alias("revenue"),
+            F.count(F.when(
+                F.col("o_orderstatus").isin(*changed), 1)).alias(
+                    "n_changed"),
+        )
+        .withColumn("version", F.lit(tag))
+    )
+
+
 # --- table diff: change data feed from the manifest diff -------------
 
 def manifest_diff(table: str) -> tuple[list[str], list[str]]:
@@ -500,7 +446,7 @@ def manifest_diff(table: str) -> tuple[list[str], list[str]]:
     a proof of byte-equality, so the diff never has to read those
     partitions at all. Returns (differing months, shared months)."""
     t = Path(table)
-    months = sorted(p.name for p in (t / "v0").glob("o_month=*"))
+    months = tablefmt.partitions(t / "v0")
     diff, same = [], []
     for m in months:
         a, b = (t / "v0" / m).resolve(), (t / "v1" / m).resolve()
@@ -617,31 +563,14 @@ def publish_next_version(spark: SparkSession, table: str,
     """Apply `delta` on top of the CURRENT version and publish the
     result as the next manifest: new directories for the months the
     delta touches, pointers to the previous version's targets for
-    everything else, `_current` flipped atomically. Generalizes the
-    v0->v1 step of versioned_merge to any chain length -- each
-    generation costs O(its affected months), and every historical
+    everything else, `_current` flipped atomically. versioned_merge
+    publishes v1 through it, and the chain may grow to any length --
+    each generation costs O(its affected months), and every historical
     version stays a complete readable table until vacuumed."""
-    t = Path(table)
-    prev = (t / "_current").read_text()
-    n = int(prev[1:]) + 1
-    cur = f"v{n}"
-    merged = merged_affected(affected_read(spark, str(t / prev)), delta)
-    newver = tempfile.mkdtemp(prefix="spark_graft_ttable_next_")
-    merged.write.mode("overwrite").partitionBy("o_month").parquet(newver)
-    rewritten = sorted(
-        d.name for d in Path(newver).glob("o_month=*") if d.is_dir())
-    _check_months_in_window(rewritten, newver)
-    (t / cur).mkdir()
-    for m in rewritten:
-        shutil.move(str(Path(newver) / m), str(t / cur / m))
-    for d in sorted((t / prev).glob("o_month=*")):
-        if d.name not in rewritten:
-            (t / cur / d.name).symlink_to(d.resolve())
-    shutil.rmtree(newver, ignore_errors=True)
-    ptr = t / "_current.tmp"
-    ptr.write_text(cur)
-    ptr.rename(t / "_current")
-    return cur
+    prev = Path(table) / tablefmt.current(table)
+    merged = merged_affected(affected_read(spark, str(prev)), delta)
+    return tablefmt.commit(table, _writer(merged),
+                           check=_check_months_in_window)
 
 
 def delta2_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -708,13 +637,10 @@ def run_retention(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     publish_next_version(spark, str(table), delta2_frame(spark, sf_dir))
     t = Path(table)
     keep_before = {v: _snapshot_inventory(t / v) for v in ("v0", "v2")}
-    v1_months_before = sorted(
-        p.name for p in (t / "v1").glob("o_month=*"))
+    v1_months_before = tablefmt.partitions(t / "v1")
     vfacts = vacuum(table, keep=["v0", "v2"])
     keep_after = {v: _snapshot_inventory(t / v) for v in ("v0", "v2")}
-    v1_months_after = sorted(
-        p.name for p in (t / "v1").glob("o_month=*")
-    ) if (t / "v1").exists() else []
+    v1_months_after = tablefmt.partitions(t / "v1")
     facts = {
         "bytes_reclaimed": vfacts["bytes_reclaimed"],
         "deleted_dirs": vfacts["deleted_dirs"],
@@ -795,17 +721,7 @@ def q_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, facts = run_retention(spark, sf_dir)
 
     def snap(version: str, tag: str) -> DataFrame:
-        return (
-            spark.read.parquet(str(Path(table) / version))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum(F.col("o_totalprice")).alias("revenue"),
-                F.count(F.when(
-                    F.col("o_orderstatus").isin("U", "I", "V"), 1)).alias(
-                        "n_changed"),
-            )
-            .withColumn("version", F.lit(tag))
-        )
+        return _snapshot_stats(spark, table, version, tag, ("U", "I", "V"))
 
     return (
         snap("v0", "v0").unionByName(snap("v2", "v2"))
@@ -840,7 +756,7 @@ def vacuum(table: str, keep: list[str]) -> dict:
         raise ValueError(
             f"vacuum keep names non-existent versions {missing}; "
             f"existing: {versions}")
-    current = (t / "_current").read_text()
+    current = tablefmt.current(t)
     if current not in keep:
         raise ValueError(
             f"vacuum must keep the current version {current!r} "

@@ -52,24 +52,21 @@ from pyspark.sql import functions as F
 
 from discogs_xml_to_parquet_spark.functions.exact import dsum, rev_sql
 from discogs_xml_to_parquet_spark.queries.merge import (
-    _inventory,
-    _link_or_copy,
     staged_partitioned_orders,
 )
 from discogs_xml_to_parquet_spark.registry import query
 from discogs_xml_to_parquet_spark.staging import work_dir as _work_dir
+from discogs_xml_to_parquet_spark.tablefmt import (
+    inventory as _inventory,
+    link_or_copy as _link_or_copy,
+)
 
 _CUTOFF = "1998-07-15"          # retain o_orderdate >= this
 _CUTOFF_MONTH = "1998-07"       # the partition the cutoff cuts through
 
 
-# _link_or_copy moved to merge.py (r14 optimization round): the MERGE
-# lane adopted the same hardlink-clone isolation, and merge.py is
-# already this module's import source for the shared inventory helper.
-
-
 def _inventory_young(table: str) -> dict[str, tuple[int, str]]:
-    """merge.py's _inventory restricted to the partitions the policy
+    """tablefmt's inventory restricted to the partitions the policy
     must NOT touch (months after the boundary). Restricting it is
     load-bearing twice over: inventorying the whole table would (a)
     md5-read every EXPIRED byte driver-side, falsifying the lane's

@@ -417,7 +417,10 @@ def _list_input_files(path: str, allow_empty: bool = False) -> list[str]:
     """Driver-side listing (metadata-only) for the strict lane: a file,
     a directory, or a local glob pattern. Remote URIs list via
     pyarrow.fs; glob patterns are supported for local paths (the only
-    place the tests/CLI use them).
+    place the tests/CLI use them). Scheme-less paths and local glob
+    results are made absolute against the DRIVER's cwd, as the native
+    lane resolves them: pyarrow.fs rejects a relative path, and an
+    executor's cwd is not the driver's.
 
     An empty listing RAISES by default: a typo'd glob or empty
     directory would otherwise flow into an empty DataFrame and
@@ -449,7 +452,11 @@ def _list_input_files(path: str, allow_empty: bool = False) -> list[str]:
             )
         import glob as _glob
 
-        return done(sorted(_glob.glob(path.removeprefix("file://"))))
+        return done(sorted(
+            os.path.abspath(p)
+            for p in _glob.glob(path.removeprefix("file://"))))
+    if "://" not in path:
+        path = os.path.abspath(path)
     from pyarrow import fs as pafs
 
     filesystem, p = pafs.FileSystem.from_uri(path)

@@ -89,9 +89,13 @@ def work_dir(kind: str, key: str) -> str:
 
 
 def stage_df(df):
-    """Cut lineage and materialize a mid-computation frame (the staged
-    lanes: setsim's fan-out frames, graph_iter's edge lists and rank
-    rounds, matching's candidate pool, incremental's stored MV).
+    """Cut lineage and materialize a mid-computation frame: every
+    eager cut in the package goes through here (the staged lanes --
+    setsim's fan-out frames, graph_iter's edge lists and rank rounds,
+    matching's candidate pool, incremental's stored MV -- and the
+    single multi-consumer frames such as drift's binned table and
+    operators/prefix.py's bucketed input). Only graph.py's lazy
+    `localCheckpoint(eager=False)` round bypasses it, by design.
 
     Default = `localCheckpoint()`: executor-memory blocks, zero I/O,
     NON-reliable -- on a real cluster a lost executor fails the job

@@ -297,6 +297,25 @@ def test_list_input_files_skips_hidden_and_keeps_scheme(tmp_path):
     assert dx._list_input_files("file://" + d + "/") == uris
 
 
+def test_strict_read_accepts_relative_paths(spark, tmp_path, monkeypatch):
+    """A relative directory or glob resolves against the driver's cwd,
+    as the native lane's paths do: pyarrow.fs rejects a scheme-less
+    relative path ('URI has empty scheme'), and executors do not share
+    the driver's cwd."""
+    from discogs_xml_to_parquet_spark.sources.fixture import (
+        write_synthetic_releases,
+    )
+
+    d = write_synthetic_releases(str(tmp_path / "rel"), n_releases=60,
+                                 n_files=3)
+    n_native = dx.read_releases(spark, d).count()
+    monkeypatch.chdir(tmp_path)
+    rel = os.path.relpath(d, tmp_path)
+    assert dx.read_releases_strict(spark, rel).count() == n_native
+    assert dx.read_releases_strict(
+        spark, rel + "/*.xml.gz").count() == n_native
+
+
 def test_strict_read_ignores_success_marker(spark, tmp_path):
     """End-to-end: a _SUCCESS marker in the input directory must not
     fail the strict job (it previously flowed into the gzip/XML parser)."""

@@ -1,7 +1,9 @@
 """stage_df's two staging modes (VERDICT r12 item 5).
 
-The staged lanes (setsim, graph_iter, matching, incremental) cut
-lineage through staging.stage_df. Default = localCheckpoint
+Every eager lineage cut in the package goes through staging.stage_df:
+the staged lanes (setsim, graph_iter, matching, incremental) and the
+single multi-consumer frames (drift's binned table, features' value
+counts, the CMS counter table, ...). Default = localCheckpoint
 (executor-memory blocks; a lost executor kills the job). Production =
 SPARK_GRAFT_CHECKPOINT_DIR set, which swaps the SAME call sites to
 reliable checkpoint() files under the configured dir, so a
@@ -41,12 +43,14 @@ def _rows(spark, name):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_reliable_checkpoint_mode_same_values(spark, ckpt_dir):
-    """One staged lane end-to-end in BOTH modes: identical rows, and
+@pytest.mark.parametrize(
+    "name", ["q_incremental_rollup", "q_distribution_drift"])
+def test_reliable_checkpoint_mode_same_values(spark, ckpt_dir, name):
+    """A staged lane end-to-end in BOTH modes: identical rows, and
     the reliable mode demonstrably wrote checkpoint files (otherwise
     the env switch could silently no-op and this test would pass
-    vacuously)."""
-    name = "q_incremental_rollup"
+    vacuously). q_distribution_drift's only cut is a single
+    multi-consumer frame, not a staged lane."""
     default_rows = _rows(spark, name)
 
     os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = ckpt_dir
